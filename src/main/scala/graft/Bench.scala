@@ -52,6 +52,15 @@ object Bench {
       .split("\\s+").take(3).toSeq.map(_.toDouble)
   } catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
 
+  /** A failure as "Class: message", plus its root cause when that is
+    * another exception — the message alone is null for an NPE. */
+  private[graft] def describe(e: Throwable): String = {
+    def one(t: Throwable) = s"${t.getClass.getName}: ${t.getMessage}"
+    var root = e
+    while (root.getCause != null && (root.getCause ne root)) root = root.getCause
+    if (root eq e) one(e) else s"${one(e)} (root cause ${one(root)})"
+  }
+
   def main(args: Array[String]): Unit = {
     cleanStaleTmp()
     val loadBefore = loadAvg()
@@ -174,29 +183,48 @@ object Bench {
     val partialName =
       sys.env.getOrElse("SPARK_GRAFT_PARTIAL", "bench_partial.json")
     val partialPath = java.nio.file.Paths.get(partialName)
+    // a failed entry is reported on stderr and kept, with its cause,
+    // in the partial artifact's `failures` map
+    var failures = Map.empty[String, String]
+    def failed(name: String, e: Throwable): Unit = {
+      val why = describe(e)
+      System.err.println(s"[bench] $name failed: $why")
+      failures += name -> why
+    }
+    def jsonStr(x: String): String = "\"" + x.flatMap {
+      case '"' => "\\\""; case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+    } + "\""
     def flushPartial(done: Map[String, Double]): Unit = try {
       val qs = done.map { case (k, v) => s"\"" + k + "\":" + v }
         .mkString("{", ",", "}")
+      val fs = failures.map { case (k, v) => jsonStr(k) + ":" + jsonStr(v) }
+        .mkString("{", ",", "}")
       val tmp = java.nio.file.Paths.get(partialName + ".tmp")
       java.nio.file.Files.write(tmp,
-        s"""{"metric":"partial","value":${done.values.filter(_ >= 0).sum},"unit":"sec","queries":$qs,"sf":"$sfDir","n":${done.size}}"""
+        s"""{"metric":"partial","value":${done.values.filter(_ >= 0).sum},"unit":"sec","queries":$qs,"sf":"$sfDir","n":${done.size},"failures":$fs}"""
           .getBytes("UTF-8"))
       java.nio.file.Files.move(tmp, partialPath,
         java.nio.file.StandardCopyOption.REPLACE_EXISTING,
         java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } catch { case _: Throwable => () }
-    // a failed query records -1.0 (sentinel) — its time-to-failure
-    // must not read as a fast success in the BENCH json
+    // Timed run of one entry, garbage drained first so timings don't
+    // bleed. A failed entry records -1.0 (sentinel): its
+    // time-to-failure must not read as a fast success.
+    def time(name: String)(df: => org.apache.spark.sql.DataFrame): Double = {
+      System.gc()
+      val t0 = System.nanoTime()
+      try { df.write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      } catch { case e: Throwable => failed(name, e); -1.0 }
+    }
     var acc = Map.empty[String, Double]
     val results = gated.map { case (name, fn) =>
-      System.gc() // drain cross-query garbage so timings don't bleed
-      val t0 = System.nanoTime()
-      val ok = try { run(fn); true } catch { case _: Throwable => false }
-      val t = (System.nanoTime() - t0) / 1e9
+      val t = time(name)(fn(spark, sfDir))
       unloadState()
-      acc += name -> (if (ok) t else -1.0)
+      acc += name -> t
       flushPartial(acc)
-      name -> (if (ok) t else -1.0)
+      name -> t
     } ++ (if (only.isDefined) Map.empty[String, Double] else {
       // skew stress: every doc shares a hot boilerplate header, the
       // classic posting-list skew that kills a naive inverted index;
@@ -206,13 +234,8 @@ object Bench {
         "feed please share and subscribe for more updates from the editorial team"
       val skewed = spark.read.parquet(s"$sfDir/documents.parquet")
         .select(col("doc_id"), concat(lit(boiler + " "), col("text")).as("text"))
-      val t0 = System.nanoTime()
-      val ok = try {
-        graft.operators.Dedup.ngramJaccardOf(skewed, 0.5)
-          .write.format("noop").mode("overwrite").save(); true
-      } catch { case _: Throwable => false }
-      Map("x_skew_boilerplate_jaccard" ->
-        (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0))
+      Map("x_skew_boilerplate_jaccard" -> time("x_skew_boilerplate_jaccard")(
+        graft.operators.Dedup.ngramJaccardOf(skewed, 0.5)))
     } ++ {
       // aggregation-skew pair: 10x-expanded events with half the rows
       // on one hot key; plain groupBy vs the salted two-phase plan on
@@ -225,17 +248,10 @@ object Bench {
           explode(sequence(lit(0), lit(9))).as("r"))
         .withColumn("skew_key",
           when(col("event_id") % 2 === 0, lit(-1L)).otherwise(col("user_id")))
-      def time(df: => org.apache.spark.sql.DataFrame): Double = {
-        System.gc()
-        val t0 = System.nanoTime()
-        try { df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      }
-      val plain = time(skewed.groupBy(col("skew_key"))
+      val plain = time("x_skew_agg_plain")(skewed.groupBy(col("skew_key"))
         .agg(count(lit(1)).as("n"), sum(col("value")).as("sv"),
           max(col("value")).as("mv")))
-      val salted = time(graft.operators.Skew.saltedAgg(skewed, col("skew_key"), 16,
+      val salted = time("x_skew_agg_salted")(graft.operators.Skew.saltedAgg(skewed, col("skew_key"), 16,
         Seq(count(lit(1)).as("n"), sum(col("value")).as("sv"),
           max(col("value")).as("mv")),
         Seq(sum(col("n")).as("n"), sum(col("sv")).as("sv"),
@@ -246,23 +262,18 @@ object Bench {
       // pre-filter vs the plain shuffle join on the IDENTICAL input —
       // the measured value of pruning probe rows before the shuffle
       import org.apache.spark.sql.functions._
-      def time(df: => org.apache.spark.sql.DataFrame): Double = {
-        System.gc()
-        val t0 = System.nanoTime()
-        try { df.write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch { case _: Throwable => -1.0 }
-      }
       val urgent = Tables.orders(spark, sfDir)
         .filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey"))
-      val plain = time(Tables.lineitem(spark, sfDir)
+      val plain = time("x_bloom_join_plain")(Tables.lineitem(spark, sfDir)
         .select(col("l_orderkey"),
           round(col("l_extendedprice") * 100).cast("long").as("cents"))
         .join(urgent.hint("shuffle_hash"), col("l_orderkey") === col("o_orderkey"))
         .agg(count(lit(1)).as("n_joined"), sum(col("cents")).as("revenue_cents")))
-      val filtered = time(graft.operators.Bucketing.bloomSemiJoin(spark, sfDir))
+      val filtered = time("x_bloom_join_filtered")(
+        graft.operators.Bucketing.bloomSemiJoin(spark, sfDir))
       Map("x_bloom_join_plain" -> plain, "x_bloom_join_filtered" -> filtered)
     })
+    flushPartial(results)
     val qs = results.map { case (k, v) => s"\"" + k + "\":" + v }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0

@@ -37,7 +37,7 @@ object Verify {
           "to BIGINT (keep decimal arithmetic internal)")
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       } catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] $name failed: ${Bench.describe(e)}")
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

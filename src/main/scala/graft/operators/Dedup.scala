@@ -188,19 +188,18 @@ object Dedup {
   /** [[kCore]] over an arbitrary (d1, d2) undirected edge list —
     * the generic seam (same policy as [[components]]). */
   def kCoreOf(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var cur = edges.select(col("d1").as("a"), col("d2").as("b"))
-      .unionByName(edges.select(col("d2").as("a"), col("d1").as("b")))
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
-      val keep = cur.groupBy(col("a")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("a"))
-      cur = cur
-        .join(keep.hint("shuffle_hash"), Seq("a"), "left_semi")
-        .join(keep.select(col("a").as("b")).hint("shuffle_hash"),
-          Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .localCheckpoint()
-    }
+    val cur = GraphLoop.iterate("kCore", rounds)(
+        edges.select(col("d1").as("a"), col("d2").as("b"))
+          .unionByName(edges.select(col("d2").as("a"), col("d1").as("b")))) {
+      (cur, _) =>
+        val keep = cur.groupBy(col("a")).agg(count(lit(1)).as("deg"))
+          .filter(col("deg") >= k).select(col("a"))
+        cur
+          .join(keep.hint("shuffle_hash"), Seq("a"), "left_semi")
+          .join(keep.select(col("a").as("b")).hint("shuffle_hash"),
+            Seq("b"), "left_semi")
+          .select(col("a"), col("b"))
+    }.last
     val f = cur.groupBy(col("a").as("doc_id"))
       .agg(count(lit(1)).as("core_degree"))
     f.crossJoin(broadcast(
@@ -385,18 +384,8 @@ object Dedup {
     * rounds, each one join + one agg, all distributed (the driver
     * sees only change counts; localCheckpoint truncates lineage so
     * plans stay constant-size). LSH dedup graphs are near-cliques
-    * (tiny diameter), so this is the right default.
-    *
-    * Fault-tolerance note on the localCheckpoint policy: a
-    * localCheckpoint pins blocks on the executors WITHOUT a
-    * recompute lineage — if an executor is lost mid-iteration the
-    * job fails and restarts from the start, which is the right trade
-    * for these gates (minutes of work, local mode, no distributed
-    * FS round-trip per round). A 1000-executor run iterating for
-    * hours should flip to reliable `checkpoint()` into the cluster's
-    * checkpoint dir (same lineage-truncation effect, executor-loss
-    * survivable at the cost of a DFS write per round) — the policy
-    * is a one-line swap at each localCheckpoint site.
+    * (tiny diameter), so this is the right default. Rounds run
+    * through [[GraphLoop.iterate]] (pinning, sizing, the round cap).
     *
     * `pointerDoubling = true` interleaves a label-shortcutting step —
     * l(v) ← l(l(v)), valid because labels are always vertex ids of
@@ -414,37 +403,29 @@ object Dedup {
     * q112 gates exactly that composition (one banding pass, every
     * downstream decision from it). */
   def components(edges: DataFrame, pointerDoubling: Boolean = false): DataFrame = {
-    // r17 optimization (guide §2.4): hash-partition the (static)
-    // adjacency by the join key ONCE at materialization —
-    // localCheckpoint preserves outputPartitioning, so every
-    // iteration's shuffle-hash join exchanges only the label frame
-    // (whose groupBy/join chain is itself v-partitioned round to
-    // round), not the edge list. One up-front shuffle of the edges
-    // replaces one per round, at any scale.
+    // Hash-partition the static adjacency by the join key once:
+    // localCheckpoint keeps outputPartitioning, so each round's
+    // shuffle-hash join exchanges only the label frame, not the edges.
     val adj = edges.select(col("d1").as("v"), col("d2").as("u"))
       .union(edges.select(col("d2").as("v"), col("d1").as("u")))
       .repartition(col("u")).localCheckpoint()
-    // r18: rounds run under input-derived loop sizing (see
-    // GraphLoop) — the count is on the materialized checkpoint.
-    GraphLoop.withSizing(edges.sparkSession, adj.count()) {
-      var labels = adj.select(col("v")).distinct()
-        .withColumn("label", col("v")).localCheckpoint()
-      var changed = 1L
-      while (changed > 0) {
-        val updated =
-          componentsRelaxRound(adj, labels, pointerDoubling).localCheckpoint()
-        changed = updated.filter(col("next") < col("label")).count()
-        labels = updated.select(col("v"), col("next").as("label"))
-      }
-      labels.select(col("v").as("doc_id"), col("label").as("component"))
-    }
+    // Min-label propagation settles within V rounds (V ≤ adjacency
+    // rows), so the row count that sizes the loop also caps it.
+    val n = adj.count()
+    // state (v, label, next): the round's input label and its result
+    GraphLoop.iterate("components", math.min(n, Int.MaxValue).toInt,
+        sizeBy = Some(edges.sparkSession -> n),
+        until = Some(_.filter(col("next") < col("label")).count() == 0))(
+        adj.select(col("v")).distinct()
+          .select(col("v"), col("v").as("label"), col("v").as("next"))) {
+      (st, _) => componentsRelaxRound(adj,
+        st.select(col("v"), col("next").as("label")), pointerDoubling)
+    }.last.select(col("v").as("doc_id"), col("next").as("component"))
   }
 
-  /** ONE relax round of [[components]] — factored out (r18, VERDICT
-    * r17 "Next #7") so the loop body's plan is dumpable: the loop's
-    * localCheckpoint otherwise hides the per-round join shape from
-    * every explain. Explain's `q59_components_round` probe dumps
-    * exactly this frame over the real banded edges. */
+  /** One relax round of [[components]], unpinned, so its join shape
+    * can be explained and plan-tested; Explain's
+    * `q59_components_round` probe dumps it over the banded edges. */
   private[graft] def componentsRelaxRound(adj: DataFrame,
       labels: DataFrame, pointerDoubling: Boolean): DataFrame = {
     // labels side shuffle-hash: SMJ would re-sort the (bigger)
@@ -1303,55 +1284,94 @@ object Dedup {
     * replays the 5 rounds as unrolled CTEs. Σ-bound: 850·Σshares ≤
     * 850·10⁶·n fits a long up to n ≈ 10¹⁰ docs.
     */
-  def pageRank(s: SparkSession, dir: String, iters: Int = 5,
-      checkpoint: Boolean = true): DataFrame = {
+  def pageRank(s: SparkSession, dir: String, iters: Int = 5): DataFrame = {
     val edges = minhashLsh(s, dir)
     // both directions; the two selects are disjoint (d1 < d2), so
     // this matches the oracle's UNION without a distinct
     val adj0 = edges.select(col("d1").as("v"), col("d2").as("u"))
       .union(edges.select(col("d2").as("v"), col("d1").as("u")))
-    pageRankOf(adj0, iters, checkpoint)
+    pageRankOf(adj0, iters)
       .select(col("v").as("doc_id"), col("s").as("score_scaled"))
   }
 
-  /** Integer PageRank CORE over an arbitrary directed adjacency
-    * frame (v = target, u = source) — factored out of q94
-    * (round-15) so the co-purchase graph (q450), seeded/personalized
-    * teleport (q455), and word graphs (q454 TextRank) reuse the one
-    * deterministic-arithmetic loop: ppm-scaled long scores, share =
-    * s div deg, damping (850·Σ) div 1000, fixed `iters` rounds of
-    * one shuffle-hash equi-join + one map-side-combinable sum,
-    * localCheckpoint per round — bit-identical on any engine and
-    * partitioning (the q94 contract), replayed by unrolled oracle
-    * CTEs. `seeds`: when set, teleport mass lands ONLY on the seed
-    * vertices (personalized PageRank — Jeh & Widom 2003 —
-    * init 10⁶ on seeds / 0 elsewhere, per-round base 150000 on
-    * seeds / 0 elsewhere). Returns (v, s).
+  /** Integer PageRank core over an arbitrary directed adjacency
+    * frame (v = target, u = source), shared by q94, the co-purchase
+    * graph (q450), seeded teleport (q455) and word graphs (q454
+    * TextRank): ppm-scaled long scores, share = s div deg, damping
+    * (850·Σ) div 1000, fixed `iters` rounds of [[pageRankRound]] —
+    * bit-identical on any engine and partitioning, replayed by
+    * unrolled oracle CTEs. `seeds`: when set, teleport mass lands
+    * ONLY on the seed vertices (personalized PageRank — Jeh & Widom
+    * 2003 — init 10⁶ on seeds / 0 elsewhere, per-round base 150000
+    * on seeds / 0 elsewhere). Returns (v, s).
     *
-    * PRECONDITION (round-15 ADVICE): the adjacency must be
-    * SYMMETRIC-VERTEXED — every edge target must also appear as a
-    * source (trivially true for the symmetrized/undirected graphs
-    * all current callers build: q94/q450 union both directions, q454
-    * windows are bidirectional, q455 reuses q450's edges). The
-    * vertex universe here is the SOURCE set (deg keys), and each
-    * round LEFT-joins it onto the contribution sum, so a source with
-    * no in-edges keeps exactly its teleport base — which is what the
-    * unrolled oracle CTEs' inner-join `150000 + …` form computes
-    * only when no sink-only/source-only asymmetry exists. A future
-    * DIRECTED-graph caller must symmetrize the VERTEX SET first
-    * (union zero-degree rows) or its dangling/source-only vertices
-    * silently diverge from the oracle template. Checked structurally
-    * in Round16Spec (directed counterexample pinned), not per-call —
-    * a targets⊆sources anti-join per invocation would cost a full
-    * extra shuffle at 100 TB for a property the callers guarantee by
-    * construction. */
+    * PRECONDITION: the adjacency must be SYMMETRIC-VERTEXED — every
+    * edge target must also appear as a source (trivially true for the
+    * symmetrized/undirected graphs all current callers build: q94/q450
+    * union both directions, q454 windows are bidirectional, q455
+    * reuses q450's edges). The vertex universe here is the SOURCE set
+    * (deg keys), and each round LEFT-joins it onto the contribution
+    * sum, so a source with no in-edges keeps exactly its teleport
+    * base — which is what the unrolled oracle CTEs' inner-join
+    * `150000 + …` form computes only when no sink-only/source-only
+    * asymmetry exists. A future DIRECTED-graph caller must symmetrize
+    * the VERTEX SET first (union zero-degree rows) or its
+    * dangling/source-only vertices silently diverge from the oracle
+    * template. Checked structurally in Round16Spec (directed
+    * counterexample pinned), not per-call — a targets⊆sources
+    * anti-join per invocation would cost a full extra shuffle at
+    * 100 TB for a property the callers guarantee by construction. */
   private[graft] def pageRankOf(adj0: DataFrame, iters: Int,
-      checkpoint: Boolean = true, seeds: Option[DataFrame] = None)
-      : DataFrame = {
-    // checkpoint=false keeps the composed plan visible (PlanSpec
-    // pins the iteration's join shape through it)
-    val adj = if (checkpoint) adj0.localCheckpoint() else adj0
-    val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+      seeds: Option[DataFrame] = None): DataFrame =
+    pageRankLoop(adj0, iters, count(lit(1)), UnweightedShare, seeds,
+      history = false).last
+
+  /** Unseeded [[pageRankOf]] returning EVERY round's (v, s) frame,
+    * index 0 (the uniform 10⁶ init) through `iters`. This is q476's
+    * substrate: with exact integer arithmetic and a fixed round
+    * budget, score_r(v) is a pure function of v's r-hop
+    * in-neighborhood, so a delta run can splice UNTOUCHED vertices'
+    * old round-r scores into round r+1 verbatim — which needs the old
+    * run's per-round frames, not just its final one. Each round is a
+    * pinned (v, s) frame: the O(V·iters) retention IS the incremental
+    * maintenance storage cost (at 100 TB these are the "yesterday's
+    * per-round score tables" a daily job keeps next to yesterday's
+    * final ranks). */
+  private[graft] def pageRankHistory(adj0: DataFrame, iters: Int)
+      : Seq[DataFrame] =
+    pageRankLoop(adj0, iters, count(lit(1)), UnweightedShare, None,
+      history = true)
+
+  /** WEIGHTED integer-PageRank core — [[pageRankOf]] with per-edge
+    * weights: share along u→v is (s_u·w_uv) div W_u where W_u = Σ w
+    * over u's out-edges, damping and base unchanged. The s·w product
+    * rides DECIMAL(38,0) INTERNAL (s ≤ 10⁶·|V|, w unbounded micro —
+    * the q256 overflow treatment), the share is BIGINT after the
+    * integer division, so the result stays bit-identical on any
+    * engine and partitioning. `adj0` carries (v, u, w); same
+    * symmetric-vertex precondition as [[pageRankOf]]. With constant
+    * weights the integer shares collapse to s div deg exactly
+    * ((s·w) div (deg·w) = s div deg), so constant-weight ≡
+    * unweighted — Round16Spec pins it. */
+  private[graft] def weightedPageRankOf(adj0: DataFrame, iters: Int)
+      : DataFrame =
+    pageRankLoop(adj0, iters, sum(col("w")), expr(
+      "CAST(CAST(s AS DECIMAL(38,0)) * w div nullif(deg, 0) AS BIGINT)"),
+      None, history = false).last
+
+  /** Share of an unweighted edge: the source's score split evenly
+    * over its out-degree, in BIGINT. */
+  private[graft] val UnweightedShare: Column = expr("s div deg")
+
+  /** The PageRank loop behind [[pageRankOf]], [[pageRankHistory]] and
+    * [[weightedPageRankOf]]: `outDeg` aggregates a source's out-edges
+    * into `deg`, `share` prices one edge's contribution from the
+    * joined (s, deg[, w]) row. */
+  private def pageRankLoop(adj0: DataFrame, iters: Int, outDeg: Column,
+      share: Column, seeds: Option[DataFrame], history: Boolean)
+      : Seq[DataFrame] = {
+    val adj = adj0.localCheckpoint()
+    val deg = adj.groupBy(col("u")).agg(outDeg.as("deg"))
     val verts = deg.select(col("u").as("v"))
     val seedCol = seeds match {
       case Some(sd) => verts.join(
@@ -1364,142 +1384,44 @@ object Dedup {
     val base = seedCol.select(col("v"),
         (col("is_seed") * 150000L).as("b"))
       .localCheckpoint() // bounded: one row per vertex, reused per round
-    // r17 optimization (guide §2.4 — loop-invariant work out of the
-    // loop): the out-degree never changes across rounds, so join it
-    // onto the adjacency ONCE instead of once per iteration. The old
-    // loop paid, per round, a full deg recompute (scan + exchange +
-    // agg over the checkpointed adj) plus a shuffle-hash join; now
-    // both happen once. deg is unique per u and the join is inner
-    // 1:1, so the contribution rows — and every integer share — are
-    // bit-identical to the per-round-join form.
-    val adjDeg0 = adj.join(deg.hint("shuffle_hash"), "u")
-      .select(col("v"), col("u"), col("deg"))
-    // hash-partitioned by the loop's join key at materialization, so
-    // each round exchanges only the score frame (see components)
-    val adjDeg =
-      if (checkpoint) adjDeg0.repartition(col("u")).localCheckpoint()
-      else adjDeg0
-    // r18: rounds run under input-derived loop sizing (the
-    // components treatment — GraphLoop) when the adjacency is
-    // materialized; the checkpoint=false probe path keeps the
-    // session conf so Explain dumps the production plan shape.
-    def rounds(): DataFrame = {
-      var scores = base.select(col("v"),
-        when(col("b") > 0L, lit(1000000L)).otherwise(lit(0L)).as("s"))
-      for (_ <- 1 to iters) {
-        val contrib = adjDeg
-          .join(scores.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
-          .select(col("v"), expr("s div deg").as("share"))
-        val next = base
-          .join(contrib.groupBy(col("v"))
-              .agg(expr("cast((850 * sum(share)) div 1000 as bigint)")
-                .as("m")),
-            Seq("v"), "left")
-          .select(col("v"),
-            (col("b") + coalesce(col("m"), lit(0L))).as("s"))
-        scores = if (checkpoint) next.localCheckpoint() else next
-      }
-      scores
-    }
-    if (checkpoint)
-      GraphLoop.withSizing(adj0.sparkSession, adjDeg.count())(rounds())
-    else rounds()
-  }
-
-  /** Unseeded integer-PageRank ROUND HISTORY over a symmetric-vertex
-    * adjacency — the same loop as [[pageRankOf]] (seeds = None) but
-    * returning EVERY round's (v, s) frame, index 0 (the uniform 10⁶
-    * init) through `iters`. This is q476's substrate: with exact
-    * integer arithmetic and a fixed round budget, score_r(v) is a
-    * pure function of v's r-hop in-neighborhood, so a delta run can
-    * splice UNTOUCHED vertices' old round-r scores into round r+1
-    * verbatim — which needs the old run's per-round frames, not just
-    * its final one. Each frame is one localCheckpointed (v, s)
-    * projection: the O(V·iters) retention IS the incremental
-    * maintenance storage cost, priced openly (at 100 TB these are
-    * the "yesterday's per-round score tables" a daily job keeps
-    * next to yesterday's final ranks). */
-  private[graft] def pageRankRounds(adj0: DataFrame, iters: Int)
-      : Seq[DataFrame] = {
-    val adj = adj0.localCheckpoint()
-    val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val verts = deg.select(col("u").as("v"))
-    // r17 optimization: loop-invariant degree joined once (see
-    // pageRankOf) — one fewer shuffle-hash join per round, shares
-    // bit-identical.
+    // The out-degree never changes across rounds, so it is joined
+    // onto the adjacency once, hash-partitioned by the rounds' join
+    // key so each round exchanges only the score frame.
     val adjDeg = adj.join(deg.hint("shuffle_hash"), "u")
-      .select(col("v"), col("u"), col("deg"))
       .repartition(col("u")).localCheckpoint()
-    // r18: rounds under input-derived loop sizing (see GraphLoop).
-    GraphLoop.withSizing(adj0.sparkSession, adjDeg.count()) {
-      var scores = verts.select(col("v"), lit(1000000L).as("s"))
-        .localCheckpoint()
-      scores +: (1 to iters).map { _ =>
-        val contrib = adjDeg
-          .join(scores.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
-          .select(col("v"), expr("s div deg").as("share"))
-        scores = verts
-          .join(contrib.groupBy(col("v"))
-              .agg(expr("cast((850 * sum(share)) div 1000 as bigint)")
-                .as("m")),
-            Seq("v"), "left")
-          .select(col("v"),
-            (lit(150000L) + coalesce(col("m"), lit(0L))).as("s"))
-          .localCheckpoint()
-        scores
-      }
+    // init is a projection of the pinned base: pinning it would cost
+    // a job and save nothing
+    GraphLoop.iterate("pageRank", iters,
+        sizeBy = Some(adj0.sparkSession -> adjDeg.count()),
+        history = history, pinInit = false)(
+        base.select(col("v"),
+          when(col("b") > 0L, lit(1000000L)).otherwise(lit(0L)).as("s"))) {
+      (scores, _) => pageRankRound(adjDeg, base, scores, share)
     }
   }
 
-  /** WEIGHTED integer-PageRank core (round-16, VERDICT Next #7) —
-    * [[pageRankOf]] with per-edge weights: share along u→v is
-    * (s_u·w_uv) div W_u where W_u = Σ w over u's out-edges, damping
-    * and base unchanged. The s·w product rides DECIMAL(38,0)
-    * INTERNAL (s ≤ 10⁶·|V|, w unbounded micro — the q256 overflow
-    * treatment), the share is BIGINT after the integer division, so
-    * the result stays bit-identical on any engine and partitioning.
-    * `adj0` carries (v, u, w); same symmetric-vertex precondition
-    * as [[pageRankOf]]. With constant weights the integer shares
-    * collapse to s div deg exactly ((s·w) div (deg·w) = s div deg),
-    * so constant-weight ≡ unweighted — Round16Spec pins it. */
-  private[graft] def weightedPageRankOf(adj0: DataFrame, iters: Int)
-      : DataFrame = {
-    val adj = adj0.localCheckpoint()
-    val wdeg = adj.groupBy(col("u"))
-      .agg(sum(col("w")).as("sw")).localCheckpoint()
-    val verts = wdeg.select(col("u").as("v"))
-    // r17 optimization: loop-invariant weight total joined once (see
-    // pageRankOf) — one fewer shuffle-hash join per round, shares
-    // bit-identical.
-    val adjW = adj.join(wdeg.hint("shuffle_hash"), "u")
-      .select(col("v"), col("u"), col("w"), col("sw"))
-      .repartition(col("u")).localCheckpoint()
-    // r18: rounds under input-derived loop sizing (see GraphLoop).
-    GraphLoop.withSizing(adj0.sparkSession, adjW.count()) {
-      var scores = verts.select(col("v"), lit(1000000L).as("s"))
-        .localCheckpoint()
-      for (_ <- 1 to iters) {
-        val contrib = adjW
-          .join(scores.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
-          .select(col("v"), expr(
-            """CAST(CAST(s AS DECIMAL(38,0)) * w div nullif(sw, 0)
-              | AS BIGINT)""".stripMargin).as("share"))
-        scores = verts
-          .join(contrib.groupBy(col("v"))
-              .agg(expr("cast((850 * sum(share)) div 1000 as bigint)")
-                .as("m")),
-            Seq("v"), "left")
-          .select(col("v"),
-            (lit(150000L) + coalesce(col("m"), lit(0L))).as("s"))
-          .localCheckpoint()
-      }
-      scores
-    }
+  /** One integer-PageRank round, unpinned: every (v, u, deg[, w])
+    * adjacency row takes `share` of u's score, and v's next score is
+    * its teleport base b + (850·Σshare) div 1000. The scores side is
+    * shuffle-hash, so the bigger adjacency side is never re-sorted.
+    * Vertices are `base`'s (v, b) rows; a vertex without in-edges
+    * keeps b. */
+  private[graft] def pageRankRound(adjDeg: DataFrame, base: DataFrame,
+      scores: DataFrame, share: Column): DataFrame = {
+    val contrib = adjDeg
+      .join(scores.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
+      .select(col("v"), share.as("share"))
+    base
+      .join(contrib.groupBy(col("v"))
+          .agg(expr("cast((850 * sum(share)) div 1000 as bigint)")
+            .as("m")),
+        Seq("v"), "left")
+      .select(col("v"),
+        (col("b") + coalesce(col("m"), lit(0L))).as("s"))
   }
 
   /** ONE-LEVEL MODULARITY COMMUNITY DETECTION (Louvain first level,
-    * Blondel et al. 2008; round-17, VERDICT Next #5) over an
+    * Blondel et al. 2008) over an
     * undirected (pa, pb) edge frame — the modularity-based member
     * the graph family (centrality q450/q455/q477, components q109,
     * cores, propagation) was missing. SYNCHRONOUS label moves with
@@ -1543,13 +1465,11 @@ object Dedup {
     val deg = adj.groupBy(col("v")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
     val mRow = edges.agg(count(lit(1)).as("m")).localCheckpoint()
-    // r18: label rounds under input-derived loop sizing (see
-    // GraphLoop) — the per-round sig/kin/score chain is 5 shuffle
-    // stages of label-sized rows; sizing collapses the AQE per-stage
-    // job fan-out exactly as in components/pageRankOf.
-    val labFinal = GraphLoop.withSizing(edges0.sparkSession, adj.count()) {
-    var lab = deg.select(col("v"), col("v").as("lab")).localCheckpoint()
-    for (r <- 1 to rounds) {
+    // the per-round sig/kin/score chain is 5 shuffle stages of
+    // label-sized rows, so the rounds run sized
+    val lab = GraphLoop.iterate("louvainOneLevel", rounds,
+        sizeBy = Some(edges0.sparkSession -> adj.count()))(
+        deg.select(col("v"), col("v").as("lab"))) { (lab, r) =>
       val sig = lab.join(deg.hint("shuffle_hash"), "v")
         .groupBy(col("lab")).agg(sum(col("deg")).as("sig"))
       // k_in(v, c): v's neighbor count inside community c (round-
@@ -1579,15 +1499,11 @@ object Dedup {
       val picked = scored.groupBy(col("v"))
         .agg(max_by(col("c"),
           struct(col("score"), negate(col("c")))).as("plab"))
-      lab = lab.join(picked.hint("shuffle_hash"), "v")
+      lab.join(picked.hint("shuffle_hash"), "v")
         .select(col("v"),
           when((col("v") + lit(r.toLong)) % 2 === 0, col("plab"))
             .otherwise(col("lab")).as("lab"))
-        .localCheckpoint()
-    }
-    lab
-    }
-    val lab = labFinal
+    }.last
     val comm = lab.join(deg.hint("shuffle_hash"), "v")
       .groupBy(col("lab"))
       .agg(min(col("v")).as("community"), count(lit(1)).as("n_members"),
@@ -2056,27 +1972,22 @@ object Dedup {
     * edge list — the generic seam (same policy as [[kCoreOf]]). */
   private[graft] def labelPropagationOf(edges: DataFrame,
       rounds: Int): DataFrame = {
-    // r17: partitioned by the loop's join key once (see components)
+    // partitioned by the rounds' join key once (see components)
     val und = edges.select(col("d1").as("a"), col("d2").as("b"))
       .unionByName(edges.select(col("d2").as("a"), col("d1").as("b")))
       .repartition(col("b")).localCheckpoint()
-    // r18: rounds under input-derived loop sizing (see GraphLoop).
-    val labels = GraphLoop.withSizing(edges.sparkSession, und.count()) {
-      var l = und.select(col("a").as("node")).distinct()
-        .withColumn("label", col("node"))
-        .localCheckpoint()
-      for (_ <- 1 to rounds) {
-        l = und
-          .join(l.withColumnRenamed("node", "b").hint("shuffle_hash"), "b")
-          .groupBy(col("a"), col("label"))
-          .agg(count(lit(1)).as("cnt"))
-          .groupBy(col("a").as("node"))
-          .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
-            .getField("l").as("label"))
-          .localCheckpoint()
-      }
-      l
-    }
+    val labels = GraphLoop.iterate("labelPropagation", rounds,
+        sizeBy = Some(edges.sparkSession -> und.count()))(
+        und.select(col("a").as("node")).distinct()
+          .withColumn("label", col("node"))) { (l, _) =>
+      und
+        .join(l.withColumnRenamed("node", "b").hint("shuffle_hash"), "b")
+        .groupBy(col("a"), col("label"))
+        .agg(count(lit(1)).as("cnt"))
+        .groupBy(col("a").as("node"))
+        .agg(min(struct((-col("cnt")).as("nc"), col("label").as("l")))
+          .getField("l").as("label"))
+    }.last
     labels.groupBy(col("label"))
       .agg(count(lit(1)).as("sz"))
       .groupBy(col("sz").as("community_size"))
@@ -2109,35 +2020,34 @@ object Dedup {
   /** [[bfsHops]] over an arbitrary (d1, d2) undirected edge list —
     * the generic seam (same policy as [[labelPropagationOf]]). */
   private[graft] def bfsHopsOf(edges: DataFrame, maxHops: Int,
-      seedMod: Long, checkpoint: Boolean = true): DataFrame = {
-    // checkpoint=false keeps the composed plan visible (PlanSpec pins
-    // the per-hop join shape through it — the q94 policy)
-    def cp(df: DataFrame): DataFrame = if (checkpoint) df.localCheckpoint() else df
-    // r17: partitioned by the loop's join key once (see components);
-    // checkpoint=false keeps the pinned plan shape untouched
-    val adj0 = edges.select(col("d1").as("v"), col("d2").as("u"))
+      seedMod: Long): DataFrame = {
+    // partitioned by the rounds' join key once (see components). The
+    // rounds stay unsized: under a shrunken partition count each round
+    // re-exchanged the session-partitioned adjacency against the
+    // one-partition frontier, which made q324 slower, not faster.
+    val adj = edges.select(col("d1").as("v"), col("d2").as("u"))
       .union(edges.select(col("d2").as("v"), col("d1").as("u")))
-    val adj = cp(if (checkpoint) adj0.repartition(col("u")) else adj0)
-    // (r18 note: GraphLoop sizing was A/B-tested here and REVERTED —
-    // q324 3.26→4.17 s PJ: under the shrunken partition count every
-    // relax round re-exchanged the session-partitioned banded
-    // adjacency against the 1-partition frontier, costing more than
-    // the per-round scheduling it saved. The pageRank/labelProp/
-    // Louvain graphs measured the other way; see OPTIMIZATION_r18.)
-    var settled = cp(adj.select(col("u")).distinct()
-      .filter(col("u") % seedMod === 0)
-      .select(col("u").as("v"), lit(0L).as("hops")))
-    var frontier = settled.select(col("v"))
-    for (h <- 1 to maxHops) {
-      val next = cp(adj
-        .join(frontier.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
-        .select(col("v")).distinct()
-        .join(settled.select(col("v")), Seq("v"), "left_anti")
-        .withColumn("hops", lit(h.toLong)))
-      settled = cp(settled.union(next))
-      frontier = next.select(col("v"))
-    }
-    settled.select(col("v").as("doc_id"), col("hops"))
+      .repartition(col("u")).localCheckpoint()
+    GraphLoop.iterate("bfsHops", maxHops)(
+        adj.select(col("u")).distinct()
+          .filter(col("u") % seedMod === 0)
+          .select(col("u").as("v"), lit(0L).as("hops"))) {
+      (settled, h) => bfsExpandRound(adj, settled, h)
+    }.last.select(col("v").as("doc_id"), col("hops"))
+  }
+
+  /** One BFS round, unpinned: the frontier is the vertices settled in
+    * round h−1; their unsettled neighbors settle at hop h. */
+  private[graft] def bfsExpandRound(adj: DataFrame, settled: DataFrame,
+      h: Int): DataFrame = {
+    val frontier = settled.filter(col("hops") === h - 1)
+      .select(col("v").as("u"))
+    val next = adj
+      .join(frontier.hint("shuffle_hash"), "u")
+      .select(col("v")).distinct()
+      .join(settled.select(col("v")), Seq("v"), "left_anti")
+      .withColumn("hops", lit(h.toLong))
+    settled.union(next)
   }
 
   /** q324: INCREMENTAL BFS — new edges arrive, distances only
@@ -2193,7 +2103,8 @@ object Dedup {
   private[graft] def bfsRelaxOf(s: SparkSession, baseDist: DataFrame,
       allEdges: DataFrame, delta: DataFrame, maxHops: Int,
       seedMod: Long): DataFrame = {
-    // r17: partitioned by the loop's join key once (see components)
+    // partitioned by the rounds' join key once (see components); the
+    // rounds stay unsized for the reason given in bfsHopsOf
     val adjAll = allEdges.select(col("d1").as("u"), col("d2").as("v"))
       .union(allEdges.select(col("d2").as("u"), col("d1").as("v")))
       .repartition(col("u")).localCheckpoint()
@@ -2206,30 +2117,36 @@ object Dedup {
       .join(baseDist.select(col("v")), Seq("v"), "left_anti")
       .withColumn("hops", lit(0L))
       .localCheckpoint()
-    // (r18 note: GraphLoop sizing A/B-tested and REVERTED here —
-    // see bfsHopsOf.)
-    var dist = baseDist.union(newSeeds).localCheckpoint()
-    // (a) first-wave improvements: delta edges relaxed off the
-    // persisted distances (plus the new seeds merged above)
-    def relax(adj: DataFrame, frontier: DataFrame): DataFrame =
-      adj.join(frontier.withColumnRenamed("v", "u")
-          .withColumnRenamed("hops", "du").hint("shuffle_hash"), "u")
-        .select(col("v"), (col("du") + 1).as("cand"))
-        .filter(col("cand") <= maxHops)
-        .groupBy(col("v")).agg(min(col("cand")).as("cand"))
-        .join(dist.withColumnRenamed("hops", "d"), Seq("v"), "left")
-        .filter(col("d").isNull || col("cand") < col("d"))
-        .select(col("v"), col("cand").as("hops"))
-    var frontier = newSeeds.union(relax(deltaAdj, dist)).localCheckpoint()
-    dist = dist.join(frontier.select(col("v")), Seq("v"), "left_anti")
-      .union(frontier).localCheckpoint()
-    for (_ <- 1 to maxHops) {
-      val improved = relax(adjAll, frontier).localCheckpoint()
-      dist = dist.join(improved.select(col("v")), Seq("v"), "left_anti")
-        .union(improved).localCheckpoint()
-      frontier = improved
-    }
-    dist.select(col("v").as("doc_id"), col("hops"))
+    // State (v, hops, fresh): fresh marks the vertices whose distance
+    // improved last round, i.e. the next frontier. The initial state
+    // is (a), the delta edges relaxed off every persisted distance and
+    // new seed. A new seed has no base edge (it would be in the base
+    // index otherwise), so all its neighbors are reached by that first
+    // wave and it need not stay in the frontier.
+    GraphLoop.iterate("bfsRelax", maxHops)(bfsRelaxRound(deltaAdj,
+        baseDist.union(newSeeds).withColumn("fresh", lit(true)),
+        maxHops)) {
+      (st, _) => bfsRelaxRound(adjAll, st, maxHops)
+    }.last.select(col("v").as("doc_id"), col("hops"))
+  }
+
+  /** One decrease-only relaxation of [[bfsRelaxOf]]'s (v, hops,
+    * fresh) state along `adj`: the fresh vertices' neighbors take
+    * hops + 1 (capped at `maxHops`) where that beats their distance. */
+  private def bfsRelaxRound(adj: DataFrame, st: DataFrame,
+      maxHops: Int): DataFrame = {
+    val cand = adj
+      .join(st.filter(col("fresh"))
+        .select(col("v").as("u"), col("hops").as("du")).hint("shuffle_hash"), "u")
+      .select(col("v"), (col("du") + 1).as("cand"))
+      .filter(col("cand") <= maxHops)
+      .groupBy(col("v")).agg(min(col("cand")).as("cand"))
+    val better = col("cand").isNotNull &&
+      (col("d").isNull || col("cand") < col("d"))
+    st.select(col("v"), col("hops").as("d"))
+      .join(cand, Seq("v"), "full_outer")
+      .select(col("v"), when(better, col("cand")).otherwise(col("d")).as("hops"),
+        better.as("fresh"))
   }
 
   /** q350: MINHASH ESTIMATOR AUDIT (round-11) — how good is the

@@ -645,19 +645,19 @@ object Relational {
       .select(col("pa"), col("pb"))
   }
 
-  /** q450: PAGERANK ON THE CO-PURCHASE GRAPH (round-15, VERDICT Next
-    * #6) — the GLOBAL centrality the q141/q256/q356/q421 family
-    * lacked: lift and Adamic–Adar score PAIRS; PageRank scores each
-    * PART by how central it sits in the whole co-purchase structure
-    * — the "which items anchor the catalog" ranking an assortment
-    * planner (or, on the doc/source graph, a curation pipeline
-    * ranking domains by link authority) reads. Runs the q94 integer
-    * core ([[Dedup.pageRankOf]]): edges from the q141 frame
-    * (distinct pairs, ≥ 2 shared orders) symmetrized, ppm-scaled
-    * long scores, share = s div deg, damping (850·Σ) div 1000,
-    * 5 fixed rounds of shuffle-hash join + map-side-combinable sum,
-    * localCheckpoint per round — bit-identical on any engine and
-    * partitioning; the oracle replays the rounds as unrolled CTEs. */
+  /** q450: PAGERANK ON THE CO-PURCHASE GRAPH — the GLOBAL
+    * centrality the q141/q256/q356/q421 family lacked: lift and
+    * Adamic–Adar score PAIRS; PageRank scores each PART by how
+    * central it sits in the whole co-purchase structure — the
+    * "which items anchor the catalog" ranking an assortment planner
+    * (or, on the doc/source graph, a curation pipeline ranking
+    * domains by link authority) reads. Runs the q94 integer core
+    * ([[Dedup.pageRankOf]]): edges from the q141 frame (distinct
+    * pairs, ≥ 2 shared orders) symmetrized, ppm-scaled long scores,
+    * share = s div deg, damping (850·Σ) div 1000, 5 fixed rounds of
+    * shuffle-hash join + map-side-combinable sum, localCheckpoint
+    * per round — bit-identical on any engine and partitioning; the
+    * oracle replays the rounds as unrolled CTEs. */
   def copurchasePageRank(s: SparkSession, dir: String,
       iters: Int = 5): DataFrame = {
     val edges = copurchaseEdges(s, dir)
@@ -684,19 +684,19 @@ object Relational {
       .union(edges.select(col("pb").as("v"), col("pa").as("u")))
     val seeds = Tables.part(s, dir).filter(col("p_brand") === brand)
       .select(col("p_partkey"))
-    Dedup.pageRankOf(adj, iters, checkpoint = true, seeds = Some(seeds))
+    Dedup.pageRankOf(adj, iters, seeds = Some(seeds))
       .select(col("v").as("part"), col("s").as("score_scaled"))
   }
 
-  /** q476: INCREMENTAL PAGERANK DELTA MAINTENANCE (round-16, VERDICT
-    * Next #6) — the operational answer to "q450 recomputes 5 full
-    * rounds from scratch" at 100 TB with daily edge deltas: given
-    * yesterday's graph (the co-purchase edges MINUS a deterministic
-    * ~5% delta slice), yesterday's per-round score frames
-    * ([[Dedup.pageRankRounds]] — the O(V·iters) state a daily job
-    * retains), and today's delta, recompute ONLY vertices reachable
-    * from delta-touched vertices within the fixed round budget (the
-    * q324 BFS-delta frontier treatment applied to the q450 core):
+  /** q476: INCREMENTAL PAGERANK DELTA MAINTENANCE — the operational
+    * answer to "q450 recomputes 5 full rounds from scratch" at 100
+    * TB with daily edge deltas: given yesterday's graph (the
+    * co-purchase edges MINUS a deterministic ~5% delta slice),
+    * yesterday's per-round score frames ([[Dedup.pageRankHistory]]
+    * — the O(V·iters) state a daily job retains), and today's
+    * delta, recompute ONLY vertices reachable from delta-touched
+    * vertices within the fixed round budget (the q324 BFS-delta
+    * frontier treatment applied to the q450 core):
     *
     *  - T₀ = delta-edge endpoints (the only vertices whose degree
     *    or incident edges changed);
@@ -733,7 +733,7 @@ object Relational {
   private[graft] def incrementalPageRankOf(edges: DataFrame,
       isDelta: Column, iters: Int): DataFrame = {
     val adjNew = symEdges(edges).localCheckpoint()
-    val hist = Dedup.pageRankRounds(symEdges(edges.filter(!isDelta)), iters)
+    val hist = Dedup.pageRankHistory(symEdges(edges.filter(!isDelta)), iters)
     val delta = edges.filter(isDelta)
     val deltaVerts = delta.select(col("pa").as("v"))
       .union(delta.select(col("pb").as("v")))
@@ -746,87 +746,64 @@ object Relational {
     e.select(col("pa").as("v"), col("pb").as("u"))
       .union(e.select(col("pb").as("v"), col("pa").as("u")))
 
-  /** The q476 SPLICE LOOP factored to return EVERY round's full
-    * spliced frame, index 0..iters (round-17: q480's streaming twin
-    * stores the per-round frames between batches, so it needs all
-    * of them, not just the last). Frame r is hist(r) outside the
-    * round-r frontier ∪ the recomputed scores on it — lazily
-    * composed over the checkpointed frontier/score pieces, so a
-    * caller that only forces `.last` (q476) materializes exactly
-    * the pre-refactor plan. VALIDITY has one extra useful fixed
-    * point: when `hist` is already the per-round history of the
-    * FULL adjacency (a replayed delta whose edges are all present),
-    * the blend recomputes identical scores on the frontier and the
-    * output equals `hist` — which is what makes q480's
+  /** The q476 SPLICE LOOP, returning EVERY round's full spliced
+    * frame, index 0..iters (q480's streaming twin stores the
+    * per-round frames between batches). Frame r is hist(r) outside
+    * the round-r frontier ∪ the recomputed scores on it, composed
+    * lazily over the pinned per-round scores, so a caller that only
+    * forces `.last` (q476) computes one blend. VALIDITY has one extra
+    * useful fixed point: when `hist` is already the per-round history
+    * of the FULL adjacency (a replayed delta whose edges are all
+    * present), the blend recomputes identical scores on the frontier
+    * and the output equals `hist` — which is what makes q480's
     * checkpoint-replayed batches idempotent. */
   private[graft] def spliceRounds(hist: Seq[DataFrame], adjNew: DataFrame,
       deltaVerts: DataFrame, iters: Int): Seq[DataFrame] = {
     val degNew = adjNew.groupBy(col("u")).agg(count(lit(1)).as("deg"))
       .localCheckpoint()
-    // r17 optimization: loop-invariant degree joined onto the
-    // adjacency once (the Dedup.pageRankOf treatment) — one fewer
-    // shuffle-hash join per spliced round; the extra deg column is
-    // inert in the frontier-growth join. Shares bit-identical.
-    // partitioned by v: the frontier left_semi (the round's FIRST
-    // join, which prunes to O(edges-into-frontier)) then elides the
-    // adjacency exchange; the u-keyed score join downstream runs on
-    // the pruned frame only
+    // The degree is joined onto the adjacency once and partitioned by
+    // v: the frontier left_semi (the round's first join, which prunes
+    // to O(edges-into-frontier)) then elides the adjacency exchange;
+    // the u-keyed score join downstream runs on the pruned frame only.
     val adjDeg = adjNew.join(degNew.hint("shuffle_hash"), "u")
       .select(col("v"), col("u"), col("deg"))
       .repartition(col("v")).localCheckpoint()
-    // r18: splice rounds under input-derived loop sizing (the
-    // components/pageRank treatment — graft.operators.GraphLoop):
-    // the checkpointed frontier/score pieces materialize inside the
-    // sized scope; the lazily-composed blends are label-sized and
-    // execute under the caller's session conf as before.
-    GraphLoop.withSizing(adjNew.sparkSession, adjDeg.count()) {
-    var touched = deltaVerts.distinct().localCheckpoint()
-    // round-0 scores are 10⁶ everywhere on BOTH runs, so the spliced
-    // frame at r=0 is just the uniform init on the touched set
-    var newScores = touched.select(col("v"), lit(1000000L).as("s"))
-      .localCheckpoint()
-    val full0 = hist(0)
-      .join(touched.hint("shuffle_hash"), Seq("v"), "left_anti")
-      .unionByName(newScores)
-    full0 +: (1 to iters).map { r =>
-      val grown = touched.union(
-          adjDeg.join(touched.withColumnRenamed("v", "u")
-              .hint("shuffle_hash"), "u")
-            .select(col("v")))
-        .distinct().localCheckpoint()
-      // blended round-(r−1) scores: new on the old touched set,
-      // yesterday's frame elsewhere (anti-join keeps it disjoint)
-      val blended = hist(r - 1)
-        .join(touched.hint("shuffle_hash"), Seq("v"), "left_anti")
-        .unionByName(newScores)
-      val contrib = adjDeg
-        .join(grown.hint("shuffle_hash"), Seq("v"), "left_semi")
-        .join(blended.withColumnRenamed("v", "u").hint("shuffle_hash"), "u")
-        .select(col("v"), expr("s div deg").as("share"))
-      newScores = grown
-        .join(contrib.groupBy(col("v"))
-            .agg(expr("cast((850 * sum(share)) div 1000 as bigint)")
-              .as("m")),
-          Seq("v"), "left")
-        .select(col("v"),
-          (lit(150000L) + coalesce(col("m"), lit(0L))).as("s"))
-        .localCheckpoint()
-      touched = grown
-      hist(r)
-        .join(touched.hint("shuffle_hash"), Seq("v"), "left_anti")
-        .unionByName(newScores)
+    // State (v, s): new scores on the touched set. Round-0 scores are
+    // 10⁶ everywhere on BOTH runs, so the state starts as the uniform
+    // init on the delta endpoints.
+    val states = GraphLoop.iterate("spliceRounds", iters,
+        sizeBy = Some(adjNew.sparkSession -> adjDeg.count()),
+        history = true)(
+        deltaVerts.distinct().select(col("v"), lit(1000000L).as("s"))) {
+      (st, r) =>
+        val touched = st.select(col("v"))
+        val grown = touched.union(
+            adjDeg.join(touched.withColumnRenamed("v", "u")
+                .hint("shuffle_hash"), "u")
+              .select(col("v")))
+          .distinct()
+        Dedup.pageRankRound(
+          adjDeg.join(grown.hint("shuffle_hash"), Seq("v"), "left_semi"),
+          grown.withColumn("b", lit(150000L)),
+          blend(hist(r - 1), st),
+          Dedup.UnweightedShare)
     }
-    } // GraphLoop.withSizing
+    hist.zip(states).map { case (h, st) => blend(h, st) }
   }
 
-  /** q477: WEIGHTED PAGERANK on the co-purchase graph (round-16,
-    * VERDICT Next #7) — q450's centrality with edges weighted by
-    * ASSOCIATION STRENGTH instead of mere adjacency: edge weight =
-    * the exact integer lift (n_pairs·n_orders·10⁶ div (fa·fb), the
-    * q256 serving-table number), so rank mass flows preferentially
-    * along high-lift co-purchase links — curation ranking by how
-    * strongly items travel together, not just that they ever did.
-    * Runs [[Dedup.weightedPageRankOf]]: share = (s·w) div Σw on
+  /** `scores` on its own vertices, `hist` everywhere else. */
+  private def blend(hist: DataFrame, scores: DataFrame): DataFrame =
+    hist.join(scores.select(col("v")).hint("shuffle_hash"), Seq("v"), "left_anti")
+      .unionByName(scores)
+
+  /** q477: WEIGHTED PAGERANK on the co-purchase graph — q450's
+    * centrality with edges weighted by ASSOCIATION STRENGTH instead
+    * of mere adjacency: edge weight = the exact integer lift
+    * (n_pairs·n_orders·10⁶ div (fa·fb), the q256 serving-table
+    * number), so rank mass flows preferentially along high-lift
+    * co-purchase links — curation ranking by how strongly items
+    * travel together, not just that they ever did. Runs
+    * [[Dedup.weightedPageRankOf]]: share = (s·w) div Σw on
     * DECIMAL(38,0) internal, same base/damping/rounds as q450,
     * bit-identical on any partitioning; the oracle replays the
     * weighted rounds as unrolled CTEs (HUGEINT internal). */

@@ -1530,12 +1530,12 @@ object Similarity {
         col("c.neg_label").as("neg_label"), col("c.cosine").as("cosine"))
   }
 
-  /** q478: GRAPH-ANN BEAM SEARCH (HNSW-family; round-17, VERDICT
-    * Next #4) — the graph-based member of the ANN family §D so far
-    * covered by IVF (q38/q155/q171), PQ, SQ8 (q124) and LSH (q26):
-    * a bounded-degree proximity graph + fixed-round beam search,
-    * the single-node industry standard (HNSW/NSG) re-expressed as
-    * the iterative bounded-frontier shuffle-hash pattern of q450.
+  /** q478: GRAPH-ANN BEAM SEARCH (HNSW-family) — the graph-based
+    * member of the ANN family §D so far covered by IVF
+    * (q38/q155/q171), PQ, SQ8 (q124) and LSH (q26): a
+    * bounded-degree proximity graph + fixed-round beam search, the
+    * single-node industry standard (HNSW/NSG) re-expressed as the
+    * iterative bounded-frontier shuffle-hash pattern of q450.
     *
     * INDEX BUILD (the part a 100 TB deploy runs offline): candidate
     * edges from the q24 hyperplane-LSH banding (equi-join on
@@ -1566,87 +1566,13 @@ object Similarity {
     * every beam round from the same constants. */
   def graphAnnBeam(s: SparkSession, dir: String, dim: Int = 64,
       degree: Int = 6, beam: Int = 8, rounds: Int = 3,
-      entries: Int = 4, k: Int = 5,
-      // r18 (VERDICT r17 "Next #7"): checkpoint seam — Explain's
-      // q478_beam_round probe passes `identity` so one round's
-      // composed plan is dumpable; default behavior unchanged.
-      cp: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      entries: Int = 4, k: Int = 5): DataFrame = {
     import graft.functions.TopK
-    val q = quantized(s, dir)
-    val corpus = q.filter(col("vec_id") >= 5)
-    val cands = embedCandidatesOf(corpus, dim, DefaultNBands, DefaultBandBits)
-    // r17 optimization (guide §1.2 — don't compute things twice):
-    // score each candidate PAIR once and mirror the scored edge,
-    // instead of mirroring first and scoring both directions — the
-    // exact-cosine verify (the expensive half of the index build)
-    // halves, and the two corpus lookup joins run on half the rows.
-    // cosineQ is symmetric in its operands (element products and the
-    // norm factors commute), so the mirrored edge carries the
-    // bit-identical double. localCheckpoint pins the scored pairs so
-    // the union's two branches don't re-execute the verify joins.
-    val scored = cands
-      .join(corpus.toDF("id1", "v1", "n21").hint("shuffle_hash"), "id1")
-      .join(corpus.toDF("id2", "v2", "n22").hint("shuffle_hash"), "id2")
-      .withColumn("cos",
-        cosineQ(col("v1"), col("v2"), col("n21"), col("n22")))
-      .select(col("id1"), col("id2"), col("cos"))
-      .transform(cp)
-    // bounded-degree adjacency: ≤ degree out-edges per node, ranked
-    // by exact cosine (desc, dst asc) — reused every round, so the
-    // one localCheckpoint here is the index materialization itself
-    // (r17) adj and the corpus lookup are joined once per beam round
-    // on a static key — hash-partition them ONCE at materialization
-    // (localCheckpoint preserves outputPartitioning), so each round's
-    // shuffle-hash join exchanges only the beam frame, not the index
-    // (guide §2.4: two operations keyed the same way share one
-    // exchange; the index IS the reused side).
-    val adj = scored.select(col("id1").as("src"), col("id2").as("dst"), col("cos"))
-      .union(scored.select(col("id2").as("src"), col("id1").as("dst"), col("cos")))
-      .groupBy(col("src"))
-      .agg(TopK.topk(degree)(col("dst"), col("cos")).as("top"))
-      .select(col("src"), explode(col("top")).as("t"))
-      .select(col("src"), col("t.id").as("dst"))
-      .repartition(col("src"))
-      .transform(cp)
-    val corpusByNode = corpus.toDF("node", "cv", "cn2")
-      .repartition(col("node")).transform(cp)
-    val queries = broadcast(q.filter(col("vec_id") < 5)
-      .toDF("query_id", "qv", "qn2"))
-    val entry = corpus.orderBy(col("vec_id")).limit(entries)
-      .select(col("vec_id").as("node"), col("v"), col("n2"))
-    var beamDf = entry.crossJoin(queries)
-      .withColumn("cos", cosineQ(col("qv"), col("v"), col("qn2"), col("n2")))
-      .groupBy(col("query_id"))
-      .agg(TopK.topk(beam)(col("node"), col("cos")).as("top"))
-      .select(col("query_id"), explode(col("top")).as("t"))
-      .select(col("query_id"), col("t.id").as("node"),
-        col("t.score").as("cos"))
-      .transform(cp)
-    for (_ <- 1 to rounds) {
-      // (r17) no pre-join distinct: duplicate (query, node)
-      // expansions are ≤ beam·degree rows and the dedup groupBy
-      // below collapses them anyway (cos is a pure function of the
-      // pair, so max over duplicates is the one value) — dropping
-      // the distinct removes one exchange per round
-      val expand = beamDf.select(col("query_id"), col("node").as("src"))
-        .join(adj.hint("shuffle_hash"), "src")
-        .select(col("query_id"), col("dst").as("node"))
-        .join(corpusByNode.hint("shuffle_hash"), "node")
-        .join(queries, "query_id")
-        .withColumn("cos",
-          cosineQ(col("qv"), col("cv"), col("qn2"), col("cn2")))
-        .select(col("query_id"), col("node"), col("cos"))
-      // dedup re-visited nodes per query (cos is a pure function of
-      // (query, node), so max == the one value), keep top-beam
-      beamDf = beamDf.unionByName(expand)
-        .groupBy(col("query_id"), col("node")).agg(max(col("cos")).as("cos"))
-        .groupBy(col("query_id"))
-        .agg(TopK.topk(beam)(col("node"), col("cos")).as("top"))
-        .select(col("query_id"), explode(col("top")).as("t"))
-        .select(col("query_id"), col("t.id").as("node"),
-          col("t.score").as("cos"))
-        .transform(cp)
-    }
+    val (corpus, adj, corpusByNode, queries) = beamIndex(s, dir, dim, degree)
+    val beamDf = GraphLoop.iterate("graphAnnBeam", rounds)(
+        beamEntry(corpus, queries, entries, beam)) {
+      (beamDf, _) => beamRound(beamDf, adj, corpusByNode, queries, beam)
+    }.last
     val approx = beamDf
       .groupBy(col("query_id"))
       .agg(TopK.topk(k)(col("node"), col("cos")).as("top"))
@@ -1664,5 +1590,89 @@ object Similarity {
     approx.join(recall.hint("shuffle_hash"), "query_id")
       .select(col("query_id"), col("rank"), col("neighbor_id"),
         col("cosine"), col("recall_ppm"))
+  }
+
+  /** [[graphAnnBeam]]'s index: the corpus (vec_id ≥ 5), its pinned
+    * bounded-degree (src, dst) adjacency and (node, cv, cn2) lookup,
+    * both hash-partitioned by their round join key, and the broadcast
+    * (query_id, qv, qn2) query set. */
+  private[graft] def beamIndex(s: SparkSession, dir: String, dim: Int,
+      degree: Int): (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    import graft.functions.TopK
+    val q = quantized(s, dir)
+    val corpus = q.filter(col("vec_id") >= 5)
+    val cands = embedCandidatesOf(corpus, dim, DefaultNBands, DefaultBandBits)
+    // Each candidate PAIR is scored once and the scored edge mirrored:
+    // the exact-cosine verify (the expensive half of the index build)
+    // halves. cosineQ is symmetric in its operands, so the mirrored
+    // edge carries the bit-identical double. The pin keeps the union's
+    // two branches from re-executing the verify joins.
+    val scored = cands
+      .join(corpus.toDF("id1", "v1", "n21").hint("shuffle_hash"), "id1")
+      .join(corpus.toDF("id2", "v2", "n22").hint("shuffle_hash"), "id2")
+      .withColumn("cos",
+        cosineQ(col("v1"), col("v2"), col("n21"), col("n22")))
+      .select(col("id1"), col("id2"), col("cos"))
+      .localCheckpoint()
+    // ≤ degree out-edges per node, ranked by exact cosine (desc, dst
+    // asc). The adjacency and the corpus lookup are joined once per
+    // round on a static key, so both are hash-partitioned once here
+    // (localCheckpoint keeps outputPartitioning) and each round
+    // exchanges only the beam frame.
+    val adj = scored.select(col("id1").as("src"), col("id2").as("dst"), col("cos"))
+      .union(scored.select(col("id2").as("src"), col("id1").as("dst"), col("cos")))
+      .groupBy(col("src"))
+      .agg(TopK.topk(degree)(col("dst"), col("cos")).as("top"))
+      .select(col("src"), explode(col("top")).as("t"))
+      .select(col("src"), col("t.id").as("dst"))
+      .repartition(col("src"))
+      .localCheckpoint()
+    val corpusByNode = corpus.toDF("node", "cv", "cn2")
+      .repartition(col("node")).localCheckpoint()
+    val queries = broadcast(q.filter(col("vec_id") < 5)
+      .toDF("query_id", "qv", "qn2"))
+    (corpus, adj, corpusByNode, queries)
+  }
+
+  /** The initial beam: the `entries` smallest corpus ids, top
+    * `beam` of them per query. */
+  private[graft] def beamEntry(corpus: DataFrame, queries: DataFrame,
+      entries: Int, beam: Int): DataFrame =
+    corpus.orderBy(col("vec_id")).limit(entries)
+      .select(col("vec_id").as("node"), col("v"), col("n2"))
+      .crossJoin(queries)
+      .withColumn("cos", cosineQ(col("qv"), col("v"), col("qn2"), col("n2")))
+      .groupBy(col("query_id"))
+      .agg(graft.functions.TopK.topk(beam)(col("node"), col("cos")).as("top"))
+      .select(col("query_id"), explode(col("top")).as("t"))
+      .select(col("query_id"), col("t.id").as("node"),
+        col("t.score").as("cos"))
+
+  /** One beam-search round, unpinned: expand every beam node along
+    * `adj`, score the new candidates against the queries, keep the
+    * top `beam` per query. */
+  private[graft] def beamRound(beamDf: DataFrame, adj: DataFrame,
+      corpusByNode: DataFrame, queries: DataFrame, beam: Int): DataFrame = {
+    import graft.functions.TopK
+    // no pre-join distinct: duplicate (query, node) expansions are
+    // ≤ beam·degree rows and the dedup groupBy below collapses them
+    // anyway, one exchange fewer per round
+    val expand = beamDf.select(col("query_id"), col("node").as("src"))
+      .join(adj.hint("shuffle_hash"), "src")
+      .select(col("query_id"), col("dst").as("node"))
+      .join(corpusByNode.hint("shuffle_hash"), "node")
+      .join(queries, "query_id")
+      .withColumn("cos",
+        cosineQ(col("qv"), col("cv"), col("qn2"), col("cn2")))
+      .select(col("query_id"), col("node"), col("cos"))
+    // dedup re-visited nodes per query (cos is a pure function of
+    // (query, node), so max == the one value), keep top-beam
+    beamDf.unionByName(expand)
+      .groupBy(col("query_id"), col("node")).agg(max(col("cos")).as("cos"))
+      .groupBy(col("query_id"))
+      .agg(TopK.topk(beam)(col("node"), col("cos")).as("top"))
+      .select(col("query_id"), explode(col("top")).as("t"))
+      .select(col("query_id"), col("t.id").as("node"),
+        col("t.score").as("cos"))
   }
 }

@@ -2427,9 +2427,9 @@ object StreamingOps {
   }
 
   // ---------------------------------------------------------------
-  // q480: STREAMING INCREMENTAL PAGERANK (round-17, VERDICT Next
-  // #6) — q476's batch-form delta maintenance in its operational
-  // 100 TB shape: the WAL delivers the daily edge delta and
+  // q480: STREAMING INCREMENTAL PAGERANK — q476's batch-form delta
+  // maintenance in its operational 100 TB shape: the WAL delivers
+  // the daily edge delta and
   // foreachBatch splices scores through Relational.spliceRounds.
   // State = ONE versioned store holding both the cumulative edge
   // set and every per-round score frame (rows tagged kind='e'/'s'),
@@ -2460,7 +2460,7 @@ object StreamingOps {
       stateRoot: String, init: DataFrame, iters: Int): Unit =
     publishStore(s, stateRoot, "prstate",
       prStateOf(init.localCheckpoint(),
-        graft.operators.Dedup.pageRankRounds(
+        graft.operators.Dedup.pageRankHistory(
           Relational.symEdges(init), iters)),
       Seq.empty)
 

@@ -884,21 +884,44 @@ object TextAnalysis {
         col("l").as("left_sym"), col("r").as("right_sym"), col("n"))
     }.reduce(_ unionAll _)
 
-  /** One greedy left-to-right collapse of the broadcast 1-row (l, r)
-    * rule into `df`'s `syms` arrays (other columns pass through) —
-    * the codegen `aggregate` fold shared by train and apply. */
-  private def bpeCollapse(df: DataFrame, rule: DataFrame): DataFrame = {
-    val rest = df.columns.filterNot(_ == "syms").map(col).toSeq
-    df.crossJoin(broadcast(rule.select(col("l"), col("r"))))
+  /** One greedy left-to-right collapse of the broadcast 1-row rule
+    * (l, r, …) into `df`'s `syms` arrays — the codegen `aggregate`
+    * fold shared by train and apply; `merged` builds the merged
+    * symbol from l and r. Other columns pass through, and the rule's
+    * columns ride along (replacing an earlier rule's), so a train
+    * round's one pinned frame holds both the collapsed words and the
+    * rule that collapsed them. */
+  private def collapse(df: DataFrame, rule: DataFrame,
+      merged: String): DataFrame = {
+    val rest = df.columns.filterNot(c => c == "syms" || rule.columns.contains(c))
+    df.drop(rule.columns: _*).crossJoin(broadcast(rule))
       .select(expr(
-        """aggregate(slice(syms, 2, size(syms) - 1), array(syms[0]),
+        s"""aggregate(slice(syms, 2, size(syms) - 1), array(syms[0]),
           |(acc, x) -> if(element_at(acc, -1) = l AND x = r,
-          |  concat(slice(acc, 1, size(acc) - 1), array(concat(l, r))),
-          |  concat(acc, array(x))))""".stripMargin).as("syms") +: rest: _*)
+          |  concat(slice(acc, 1, size(acc) - 1), array($merged)),
+          |  concat(acc, array(x))))""".stripMargin).as("syms") +:
+        (rest ++ rule.columns).map(col).toSeq: _*)
   }
 
-  /** The train loop's per-round argmax rules (1-row frames, each
-    * localCheckpointed) — shared by [[bpeTrain]] and [[bpeApply]]. */
+  private def bpeCollapse(df: DataFrame, rule: DataFrame): DataFrame =
+    collapse(df, rule, "concat(l, r)")
+
+  /** Adjacent-symbol pair counts (l, r, n) of a (syms, freq) table —
+    * ≤ len−1 structs per word into a map-side-combinable agg. */
+  private def symbolPairs(words: DataFrame): DataFrame =
+    words
+      .select(col("freq"), explode(expr(
+        // guard: sequence(1, 0) DESCENDS in Spark, so a 1-symbol
+        // word would index past its end — emit no pairs instead
+        "CASE WHEN size(syms) < 2 THEN array() " +
+          "ELSE transform(sequence(1, size(syms) - 1), " +
+          "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r)) END"))
+        .as("p"))
+      .groupBy(col("p.l").as("l"), col("p.r").as("r"))
+      .agg(sum(col("freq")).as("n"))
+
+  /** The train loop's per-round argmax rules (1-row frames) — shared
+    * by [[bpeTrain]] and [[bpeApply]]. */
   private def bpeLearn(s: SparkSession, dir: String,
       rounds: Int): Seq[DataFrame] =
     bpeLearnOf(Tables.documents(s, dir)
@@ -910,27 +933,14 @@ object TextAnalysis {
     * q282 train on the full corpus (above); q474's apples-to-apples
     * fertility comparison trains on the even split. */
   private def bpeLearnOf(wordsIn: DataFrame, rounds: Int)
-      : Seq[DataFrame] = {
-    var words = wordsIn
-      .select(expr("split(w, '')").as("syms"), col("freq"))
-      .localCheckpoint()
-    (1 to rounds).map { r =>
-      val pairs = words
-        .select(col("freq"), explode(expr(
-          // guard: sequence(1, 0) DESCENDS in Spark, so a 1-symbol
-          // word would index past its end — emit no pairs instead
-          "CASE WHEN size(syms) < 2 THEN array() " +
-            "ELSE transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r)) END"))
-          .as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-      val best = pairs.orderBy(col("n").desc, col("l"), col("r")).limit(1)
-        .localCheckpoint() // the 1-row merge decision, materialized once
-      if (r < rounds) words = bpeCollapse(words, best).localCheckpoint()
-      best
-    }
-  }
+      : Seq[DataFrame] =
+    GraphLoop.iterate("bpeLearn", rounds, history = true)(
+        wordsIn.select(expr("split(w, '')").as("syms"), col("freq"))) {
+      (st, _) =>
+        val words = st.select(col("syms"), col("freq"))
+        bpeCollapse(words, symbolPairs(words)
+          .orderBy(col("n").desc, col("l"), col("r")).limit(1))
+    }.tail.map(_.select(col("l"), col("r"), col("n")).limit(1))
 
   /** q282: BPE TOKENIZER APPLY — the encode half that closes q275's
     * loop: the 3 globally-learned merge rules applied IN LEARNED
@@ -2097,9 +2107,9 @@ object TextAnalysis {
 
   // ---------------------------------------------------------------
   // q472/q473/q474: WORDPIECE tokenizer (Schuster & Nakajima 2012;
-  // the BERT-family standard — round-16, VERDICT Next #4) — the
-  // third and last major public tokenizer family next to BPE
-  // (q275/q282) and unigram-LM (q410/q411). Two published
+  // the BERT-family standard) — the third and last major public
+  // tokenizer family next to BPE (q275/q282) and unigram-LM
+  // (q410/q411). Two published
   // distinctions from BPE, both implemented: (1) TRAINING picks the
   // merge maximizing LIKELIHOOD gain, score(l,r) =
   // count(lr)/(count(l)·count(r)) — pair mass normalized by symbol
@@ -2122,60 +2132,36 @@ object TextAnalysis {
     "transform(sequence(1, length(w)), i -> " +
       "IF(i = 1, substr(w, 1, 1), concat('##', substr(w, i, 1))))"
 
-  /** One greedy left-to-right collapse of the broadcast 1-row (l, r)
-    * WordPiece rule: merged symbol = l || substr(r, 3) (r is always
-    * a continuation, so its '##' is consumed by the merge; l keeps
-    * its own namespace). Same fold-safety argument as bpeCollapse:
-    * the merged symbol is strictly longer than l, so a fresh merge
-    * never re-fires on its own output. */
-  private def wpCollapse(df: DataFrame, rule: DataFrame): DataFrame = {
-    val rest = df.columns.filterNot(_ == "syms").map(col).toSeq
-    df.crossJoin(broadcast(rule.select(col("l"), col("r"))))
-      .select(expr(
-        """aggregate(slice(syms, 2, size(syms) - 1), array(syms[0]),
-          |(acc, x) -> if(element_at(acc, -1) = l AND x = r,
-          |  concat(slice(acc, 1, size(acc) - 1),
-          |    array(concat(l, substr(r, 3)))),
-          |  concat(acc, array(x))))""".stripMargin).as("syms") +: rest: _*)
-  }
-
   /** The WordPiece train loop over a (w, freq) word table: per
     * round, adjacent-pair counts n(l,r) AND symbol counts c(x) (both
     * map-side-combinable aggs over the bounded vocab frame), the
     * likelihood score n·10¹² div (c_l·c_r) on DECIMAL(38,0), argmax
     * (score desc, l, r), greedy collapse. Returns the per-round
     * 1-row best frames (l, r, n, score). */
-  private[graft] def wpLearn(wordsIn: DataFrame, rounds: Int): Seq[DataFrame] = {
-    var words = wordsIn
-      .select(expr(wpSymsExpr).as("syms"), col("freq"))
-      .localCheckpoint()
-    (1 to rounds).map { r =>
-      val pairs = words
-        .select(col("freq"), explode(expr(
-          "CASE WHEN size(syms) < 2 THEN array() " +
-            "ELSE transform(sequence(1, size(syms) - 1), " +
-            "i -> struct(element_at(syms, i) AS l, element_at(syms, i + 1) AS r)) END"))
-          .as("p"))
-        .groupBy(col("p.l").as("l"), col("p.r").as("r"))
-        .agg(sum(col("freq")).as("n"))
-      val symCounts = words
-        .select(col("freq"), explode(col("syms")).as("sym"))
-        .groupBy(col("sym")).agg(sum(col("freq")).as("c"))
-      val best = pairs
-        .join(symCounts.select(col("sym").as("l"), col("c").as("cl"))
-          .hint("shuffle_hash"), "l")
-        .join(symCounts.select(col("sym").as("r"), col("c").as("cr"))
-          .hint("shuffle_hash"), "r")
-        .select(col("l"), col("r"), col("n"), expr(
-          """CAST(CAST(n AS DECIMAL(38,0)) * 1000000000000
-            | div (CAST(cl AS DECIMAL(38,0)) * cr) AS BIGINT)"""
-            .stripMargin).as("score"))
-        .orderBy(col("score").desc, col("l"), col("r")).limit(1)
-        .localCheckpoint() // the 1-row merge decision
-      if (r < rounds) words = wpCollapse(words, best).localCheckpoint()
-      best
-    }
-  }
+  private[graft] def wpLearn(wordsIn: DataFrame, rounds: Int): Seq[DataFrame] =
+    GraphLoop.iterate("wpLearn", rounds, history = true)(
+        wordsIn.select(expr(wpSymsExpr).as("syms"), col("freq"))) {
+      (st, _) =>
+        val words = st.select(col("syms"), col("freq"))
+        val symCounts = words
+          .select(col("freq"), explode(col("syms")).as("sym"))
+          .groupBy(col("sym")).agg(sum(col("freq")).as("c"))
+        val best = symbolPairs(words)
+          .join(symCounts.select(col("sym").as("l"), col("c").as("cl"))
+            .hint("shuffle_hash"), "l")
+          .join(symCounts.select(col("sym").as("r"), col("c").as("cr"))
+            .hint("shuffle_hash"), "r")
+          .select(col("l"), col("r"), col("n"), expr(
+            """CAST(CAST(n AS DECIMAL(38,0)) * 1000000000000
+              | div (CAST(cl AS DECIMAL(38,0)) * cr) AS BIGINT)"""
+              .stripMargin).as("score"))
+          .orderBy(col("score").desc, col("l"), col("r")).limit(1)
+        // merged symbol = l || substr(r, 3): r is always a
+        // continuation, so its '##' is consumed; l keeps its own
+        // namespace. The merged symbol is strictly longer than l, so a
+        // fresh merge never re-fires on its own output.
+        collapse(words, best, "concat(l, substr(r, 3))")
+    }.tail.map(_.select(col("l"), col("r"), col("n"), col("score")).limit(1))
 
   /** q472: WORDPIECE TOKENIZER TRAIN — the learned merge rules with
     * their selection statistics: (merge_round, left_sym, right_sym,

@@ -300,7 +300,14 @@ class PlanSpec extends SparkSpec {
   test("q94 rank iterations keep the shuffle-hash join shape") {
     // same rationale as q59: an SMJ would re-sort the adjacency list
     // every iteration; the hint must survive planning
-    val p = plan(Dedup.pageRank(spark, sfDir, iters = 1, checkpoint = false))
+    import org.apache.spark.sql.functions.{col, count, lit}
+    val edges = Dedup.minhashLsh(spark, sfDir)
+    val adj = edges.select(col("d1").as("v"), col("d2").as("u"))
+      .union(edges.select(col("d2").as("v"), col("d1").as("u")))
+    val deg = adj.groupBy(col("u")).agg(count(lit(1)).as("deg"))
+    val base = deg.select(col("u").as("v"), lit(150000L).as("b"))
+    val p = plan(Dedup.pageRankRound(adj.join(deg.hint("shuffle_hash"), "u"),
+      base, base.select(col("v"), lit(1000000L).as("s")), Dedup.UnweightedShare))
     assert(p.contains("ShuffledHashJoin") || p.contains("BroadcastHashJoin"),
       s"q94 iteration join lost its hash-join shape:\n$p")
     assert(!p.contains("CartesianProduct") &&
@@ -332,9 +339,13 @@ class PlanSpec extends SparkSpec {
     }
     // q318: the BFS frontier join keeps the hash shape every round
     // (an SMJ would re-sort the adjacency per hop — the q94 rule)
-    val bfs = plan(Dedup.bfsHopsOf(
-      Dedup.minhashLsh(spark, sfDir), maxHops = 1, seedMod = 10L,
-      checkpoint = false))
+    import org.apache.spark.sql.functions.{col, lit}
+    val e = Dedup.minhashLsh(spark, sfDir)
+    val bfsAdj = e.select(col("d1").as("v"), col("d2").as("u"))
+      .union(e.select(col("d2").as("v"), col("d1").as("u")))
+    val seeds = bfsAdj.select(col("u")).distinct().filter(col("u") % 10L === 0)
+      .select(col("u").as("v"), lit(0L).as("hops"))
+    val bfs = plan(Dedup.bfsExpandRound(bfsAdj, seeds, 1))
     assert(bfs.contains("ShuffledHashJoin") || bfs.contains("BroadcastHashJoin"),
       s"q318 frontier join lost its hash-join shape:\n$bfs")
     // q321: the resize sampling is a pure narrow scan — zero exchanges

@@ -266,6 +266,14 @@ class Round15Spec extends SparkSpec {
       assert(tot >= n * 150000L,
         s"iter $it: rank mass fell under the teleport floor")
     }
+    // the per-round history is the same loop: its round r equals an
+    // r-round pageRankOf
+    val hist = graft.operators.Dedup.pageRankHistory(cadj, 3)
+    assert(hist.size == 4)
+    for (r <- 0 to 3)
+      assert(hist(r).collect().toSet ===
+        graft.operators.Dedup.pageRankOf(cadj, r).collect().toSet,
+        s"history round $r differs from pageRankOf(adj, $r)")
   }
 
   test("q455: teleport mass lands only on seeds; non-seed scores are pure propagation") {
